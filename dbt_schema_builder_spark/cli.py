@@ -33,11 +33,11 @@ import sys
 
 import yaml
 
-from .config import AppPolicy, SourcePolicy
-from .policy.metadata import assemble_schema_doc, find_duplicates
+from .config import AppPolicy, InvalidConfigurationException, SourcePolicy
+from .policy.metadata import assemble_schema_doc, carry_forward_metadata
 from .session import get_spark, load_tables
-from .views import TrifectaBuilder
-from .views.artifacts import manual_models, write_artifacts
+from .views.artifacts import manual_models, prior_schema_doc, write_artifacts
+from .views.trifecta import HALVES, TrifectaBuilder
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -83,50 +83,42 @@ def run_build(args: argparse.Namespace) -> int:
     for app, raw in (config.get("apps") or {}).items():
         policy = policy_from_config(app, raw)
         manual = manual_models(args.destination_project, app)
-        selected = {
-            t: df for t, df in tables.items() if t.lower() not in manual
-        }
-        builder = TrifectaBuilder(spark, policy, pii_mode=pii_mode)
-        result = builder.materialize(selected)
-        doc = assemble_schema_doc(
-            app,
-            database="spark_catalog",
-            sources={
-                s.name: [t for t in selected if s.selects(t)]
-                for s in policy.sources.values()
-            },
-            models={
-                name: list(df.columns) for name, df in result.views.items()
-            },
+        selected = {t: df for t, df in tables.items() if t.lower() not in manual}
+        try:
+            result = TrifectaBuilder(spark, policy, pii_mode=pii_mode).materialize(selected)
+        except InvalidConfigurationException as exc:
+            # e.g. two tables aliased to one view, or a bad redaction literal
+            print(f"ERROR: {app}: {exc}", file=sys.stderr)
+            exit_code = 1
+            continue
+        # a full refresh keeps the hand-written metadata of the prior
+        # APP.yml (reference builder.py:476-503)
+        doc = carry_forward_metadata(
+            assemble_schema_doc(
+                app,
+                database="spark_catalog",
+                sources={
+                    s.name: [t for t in selected if s.selects(t)]
+                    for s in policy.sources.values()
+                },
+                models={name: list(df.columns) for name, df in result.views.items()},
+            ),
+            prior_schema_doc(args.destination_project, app),
+            {s.name: s.prefix for s in policy.sources.values()},
         )
         # downstream doc lists the SAFE schema and its _PII twin
         # (reference app.py:196-220: both trifecta halves are exposed as
         # downstream sources, gated by pii_mode)
-        downstream_sources: dict[str, list[str]] = {}
-        if pii_mode in ("both", "nopii"):
-            downstream_sources[app] = result.downstream_sources
-        if pii_mode in ("both", "piionly"):
-            downstream_sources[f"{app}_PII"] = result.downstream_sources
         downstream = assemble_schema_doc(
             app,
             database="spark_catalog",
-            sources=downstream_sources,
+            sources={
+                f"{app}_PII" if pii else app: result.downstream_sources
+                for pii in HALVES[pii_mode]
+            },
             models={},
         )
-        written = write_artifacts(
-            args.destination_project, app, result, doc, downstream
-        )
-        # dupe check over downstream table names (reference app.py:103-123,
-        # builder.py:567-570)
-        names = spark.createDataFrame(
-            [(f"{app}.{t}",) for t in result.downstream_sources] or [("",)],
-            "qualified string",
-        )
-        dupes = find_duplicates(names.where("qualified != ''"), ["qualified"])
-        n_dupes = dupes.count()
-        if n_dupes:
-            print(f"ERROR: duplicate downstream tables in {app}", file=sys.stderr)
-            exit_code = 1
+        written = write_artifacts(args.destination_project, app, result, doc, downstream)
         print(f"{app}: {len(result.views)} views, {len(written)} artifacts, "
               f"{len(result.skipped_unmanaged)} unmanaged skipped")
     return exit_code

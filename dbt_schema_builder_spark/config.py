@@ -78,16 +78,6 @@ class SourcePolicy:
             return t not in {x.lower() for x in self.exclude}
         return True
 
-    def soft_delete_clause(self, columns: list[str]) -> str | None:
-        """SQL predicate if the soft-delete column is present
-        (reference schema.py:105-112)."""
-        if self.soft_delete is None:
-            return None
-        col, predicate = self.soft_delete
-        if col.lower() in {c.lower() for c in columns}:
-            return f"`{col}` {predicate}"
-        return None
-
     @classmethod
     def from_config(cls, name: str, raw: dict) -> "SourcePolicy":
         raw = raw or {}

@@ -52,6 +52,30 @@ def merge_prior_metadata(
     return merged
 
 
+def carry_forward_metadata(
+    doc: dict, prior_doc: dict | None, prefixes: dict[str, str | None]
+) -> dict:
+    """Give each source table of a freshly assembled schema ``doc`` the
+    hand-written metadata it had in ``prior_doc``, the previous run's
+    document (reference builder.py:476-503), via ``merge_prior_metadata``
+    with that source's prefix. Tables absent from ``doc`` stay dropped."""
+    prior = {
+        s["name"]: {t["name"]: t for t in s.get("tables") or [] if "name" in t}
+        for s in (prior_doc or {}).get("sources") or []
+    }
+    for source in doc["sources"]:
+        merged = merge_prior_metadata(
+            [t["name"] for t in source["tables"]],
+            prior.get(source["name"], {}),
+            prefixes.get(source["name"]),
+        )
+        source["tables"] = [
+            {"name": name, **{k: v for k, v in attrs.items() if k != "name"}}
+            for name, attrs in merged.items()
+        ]
+    return doc
+
+
 def metadata_merge_join(
     current: DataFrame,
     prior: DataFrame,

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, NumericType
+from pyspark.sql.types import BooleanType, DataType, NumericType
 
 from ..config import InvalidConfigurationException
 
@@ -28,16 +28,13 @@ def pii_projection(df: DataFrame, columns: list[str] | None = None) -> DataFrame
     return df.select(*[F.col(c) for c in cols])
 
 
-def _redaction_literal(df: DataFrame, column: str, literal: object) -> Column:
-    """Literal replacement aliased to the original name, cast to the source
-    column's type so SAFE and PII views keep identical schemas (the
-    reference's views inherit Snowflake's type coercion; we make it
-    explicit). Redaction semantics per reference
-    templates/model_sql_safe.tpl:8-9, docs/redacting_pii.rst:11-27."""
-    dtype = df.schema[column].dataType
-    # fail at plan-construction time, not mid-job: a literal that cannot
-    # cast to the column type would otherwise surface as an ANSI runtime
-    # error deep inside an executor (found by property testing)
+def check_redaction_literal(column: str, dtype: DataType, literal: object) -> None:
+    """Reject a redaction literal that cannot cast to its column's type.
+
+    Runs when the view is planned, before any sink builds or writes
+    anything: a literal that cannot cast would otherwise surface as an
+    ANSI runtime error deep inside an executor (found by property
+    testing)."""
     if isinstance(dtype, NumericType) and isinstance(literal, str):
         try:
             float(literal)
@@ -52,6 +49,16 @@ def _redaction_literal(df: DataFrame, column: str, literal: object) -> Column:
                 f"redaction literal {literal!r} for boolean column "
                 f"{column!r} is not a boolean"
             )
+
+
+def _redaction_literal(df: DataFrame, column: str, literal: object) -> Column:
+    """Literal replacement aliased to the original name, cast to the source
+    column's type so SAFE and PII views keep identical schemas (the
+    reference's views inherit Snowflake's type coercion; we make it
+    explicit). Redaction semantics per reference
+    templates/model_sql_safe.tpl:8-9, docs/redacting_pii.rst:11-27."""
+    dtype = df.schema[column].dataType
+    check_redaction_literal(column, dtype, literal)
     return F.lit(literal).cast(dtype).alias(column)
 
 

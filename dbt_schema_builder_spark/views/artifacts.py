@@ -45,6 +45,15 @@ def manual_models(out_dir: str, app: str) -> set[str]:
     return names
 
 
+def prior_schema_doc(out_dir: str, app: str) -> dict | None:
+    """The ``APP.yml`` schema doc an earlier build wrote, if any."""
+    path = os.path.join(out_dir, f"{app}.yml")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return yaml.safe_load(f)
+
+
 def clean_managed_dirs(out_dir: str, app: str) -> None:
     """Destructive clean of the managed output dirs (reference
     builder.py:378-387) — manual dirs are never touched."""

@@ -2,14 +2,15 @@
 
 The reference emits Jinja SQL files that dbt later materializes as
 CREATE VIEW in Snowflake (reference relation.py:226-288, README.rst:25-28).
-The engine short-circuits that two-tool dance: the same policy pipeline
-builds DataFrames and registers them directly as temp views (or executes
-CREATE OR REPLACE VIEW when a persistent catalog is configured), plus it can
-emit the equivalent Spark-SQL text as artifacts for inspection (reference
-A22 file sink).
+The engine short-circuits that two-tool dance: one pure planner
+(``TrifectaBuilder.plan``) takes every policy decision from the schemas,
+and every sink renders the same per-view plan — temp views of DataFrames,
+persistent CREATE OR REPLACE VIEW, and the Spark-SQL text artifacts
+(reference A22 file sink).
 
-Invariant preserved: all trifecta members expose identical column count and
-order (reference README.rst:22-24); order comes from the catalog ordinals.
+Invariant preserved, in every sink: all trifecta members expose identical
+column names, types and order (reference README.rst:22-24); order comes
+from the catalog ordinals and redactions are cast to the column's type.
 """
 
 from __future__ import annotations
@@ -17,21 +18,61 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from ..config import AppPolicy, assert_safe_identifier
+from ..config import AppPolicy, InvalidConfigurationException, assert_safe_identifier
 from ..policy.identifiers import quote_identifier, relation_alias, upper_case_policy
-from ..policy.redaction import pii_projection, safe_projection, soft_delete_filter
+from ..policy.redaction import (
+    check_redaction_literal,
+    pii_projection,
+    safe_projection,
+    soft_delete_filter,
+)
+
+# the trifecta halves each pii_mode builds: False = SAFE, True = PII
+HALVES = {"both": (False, True), "nopii": (False,), "piionly": (True,)}
+
+
+@dataclass(frozen=True)
+class RelationPlan:
+    """One SAFE or PII view of one table, as every sink renders it:
+    ``schema`` holds the columns left after banned columns are dropped
+    (ordinal order, source case), ``redactions`` maps real column names
+    to type-checked literals (empty on the PII half), ``soft_delete`` is
+    ``(column, predicate)`` only when that column survives."""
+
+    table: str
+    name: str
+    pii: bool
+    raw: str
+    schema: StructType
+    redactions: dict[str, object]
+    soft_delete: tuple[str, str] | None
 
 
 @dataclass
 class TrifectaResult:
-    """Materialized views for one app: {view_name: DataFrame} plus the
-    generated SQL text keyed the same way (A22 artifact surface)."""
+    """One app's trifecta: the per-view ``plans`` and the RAW member of
+    every selected table, plus — once a sink ran — {view_name: DataFrame}
+    and the generated SQL text keyed the same way (A22 artifact
+    surface)."""
 
     views: dict[str, DataFrame] = field(default_factory=dict)
     sql: dict[str, str] = field(default_factory=dict)
     skipped_unmanaged: list[str] = field(default_factory=list)
     downstream_sources: list[str] = field(default_factory=list)
+    plans: list[RelationPlan] = field(default_factory=list)
+    raw: dict[str, str] = field(default_factory=dict)
+
+
+def _sql_literal(literal: object) -> str:
+    """SQL text of a redaction literal. Strings are escaped, never stripped,
+    so "it's done" or an already-quoted value comes out intact."""
+    if literal is None:
+        return "NULL"
+    if isinstance(literal, (int, float)):
+        return repr(literal)
+    return "'" + str(literal).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 class TrifectaBuilder:
@@ -44,7 +85,7 @@ class TrifectaBuilder:
     app.py:32-42)."""
 
     def __init__(self, spark: SparkSession, policy: AppPolicy, pii_mode: str = "both"):
-        if pii_mode not in ("both", "nopii", "piionly"):
+        if pii_mode not in HALVES:
             raise ValueError(f"invalid pii_mode {pii_mode!r}")
         self.spark = spark
         self.policy = policy
@@ -52,27 +93,19 @@ class TrifectaBuilder:
 
     # -- naming ----------------------------------------------------------
     def view_name(self, table: str, pii: bool) -> str:
-        """APP__ALIAS / APP_PII__ALIAS.
+        """APP__ALIAS / APP_PII__ALIAS. Deliberate deviation from the
+        reference's {app}_{relation} / {app}_PII_{relation} (reference
+        relation.py:104-129), which splits app and relation across
+        Snowflake *schemas*. These views share ONE Spark namespace, where
+        APP_PII_X would be ambiguous ("APP" + "PII_X" or "APP_PII" + "X"),
+        so the double underscore is the app/relation boundary; prefix
+        variants still apply to the alias half (policy/metadata.py)."""
+        return self._name(self._source_for(table), table, pii)
 
-        Deliberate deviation from the reference's {app}_{relation} /
-        {app}_PII_{relation} (reference relation.py:104-129): the
-        reference separates app and relation across Snowflake
-        *schemas*, so a single underscore is unambiguous there. These
-        views live in ONE Spark namespace, where a single underscore
-        makes APP_PII_X unparseable (app "APP" + relation "PII_X"? app
-        "APP_PII" + relation "X"?) — the double underscore is the
-        app/relation boundary, and the reference's prefix-variant
-        matching still applies to the alias half (policy/metadata.py
-        prefix handling)."""
-        alias = relation_alias(table, self._prefix_for(table))
+    def _name(self, source, table: str, pii: bool) -> str:
+        alias = relation_alias(table, source.prefix if source else None)
         suffix = "_PII" if pii else ""
         return upper_case_policy(f"{self.policy.app}{suffix}__{alias}")
-
-    def _prefix_for(self, table: str) -> str | None:
-        for source in self.policy.sources.values():
-            if source.selects(table) and source.prefix:
-                return source.prefix
-        return None
 
     def _source_for(self, table: str):
         for source in self.policy.sources.values():
@@ -80,146 +113,117 @@ class TrifectaBuilder:
                 return source
         return None
 
-    # -- plan construction ------------------------------------------------
-    def build_pair(
-        self, table: str, df: DataFrame
-    ) -> tuple[DataFrame | None, DataFrame | None]:
-        """(safe_df, pii_df) for one relation under the policy; None for a
-        half suppressed by pii_mode."""
-        source = self._source_for(table)
-        soft_col, soft_pred = (source.soft_delete if source and source.soft_delete else (None, None))
-        filtered = soft_delete_filter(df, soft_col, soft_pred)
-        cols = list(df.columns)
-        safe = pii = None
-        if self.pii_mode in ("both", "nopii"):
-            safe = safe_projection(filtered, self.policy.redactions_for(table), cols)
-        if self.pii_mode in ("both", "piionly"):
-            pii = pii_projection(filtered, cols)
-        return safe, pii
-
-    def generate_sql(
-        self,
-        table: str,
-        df: DataFrame,
-        pii: bool,
-        temporary: bool = True,
-        database: str | None = None,
-    ) -> str:
-        """Equivalent CREATE OR REPLACE VIEW text (reference
-        templates/model_sql_safe.tpl / model_sql_pii.tpl), with the
-        reference's upper-case + reserved-word quoting policy."""
-        assert_safe_identifier(table)
-        source = self._source_for(table)
-        red = {} if pii else self.policy.redactions_for(table)
-        parts = []
-        for c in df.columns:
-            name = quote_identifier(upper_case_policy(c))
-            if c.lower() in red:
-                lit = red[c.lower()]
-                # string literals are escaped by quote-doubling, never
-                # stripped: a redaction value like "it's done" must come
-                # out intact, and one that legitimately starts/ends with a
-                # quote must not be corrupted. Identifiers are validated
-                # (assert_safe_identifier); literals are data and get the
-                # standard SQL escape instead.
-                lit_sql = (
-                    lit
-                    if isinstance(lit, (int, float))
-                    else "'" + str(lit).replace("'", "''") + "'"
-                )
-                parts.append(f"    {lit_sql} AS {name}")
-            else:
-                parts.append(f"    {name}")
-        kind = "TEMPORARY VIEW" if temporary else "VIEW"
-        # a database qualifier keeps persistent views from colliding with
-        # (or being shadowed by) same-named temp views in the session
-        qualifier = f"{database}." if database else ""
-        # the FROM must be qualified too: an unqualified name would
-        # resolve to a same-named temp view, and permanent views may not
-        # reference temporary ones
-        sql = (
-            f"CREATE OR REPLACE {kind} {qualifier}{self.view_name(table, pii)} AS\n"
-            "SELECT\n" + ",\n".join(parts)
-            + f"\nFROM {qualifier}{upper_case_policy(table)}_RAW"
-        )
-        if source and source.soft_delete:
-            col, pred = source.soft_delete
-            if col.lower() in {c.lower() for c in df.columns}:
-                sql += f"\nWHERE {quote_identifier(upper_case_policy(col))} {pred}"
-        return sql
-
-    # -- materialization --------------------------------------------------
-    def materialize(self, tables: dict[str, DataFrame]) -> TrifectaResult:
-        """Full refresh for the app: idempotent re-registration of every
-        selected, managed relation's SAFE/PII views (reference
-        builder.py:505-577; destructive clean + rebuild semantics map to
-        CREATE OR REPLACE)."""
+    # -- planning ---------------------------------------------------------
+    def plan(self, schemas: dict[str, StructType]) -> TrifectaResult:
+        """Every policy decision for the app, taken once from the tables'
+        schemas: selection (A7/A8), unmanaged (A9), banned columns (A3),
+        redactions, soft delete, pii_mode, view names and downstream
+        membership (A10). Launches no Spark job; the sinks only render
+        the returned plans."""
         result = TrifectaResult()
-        for table, df in tables.items():
-            if self._source_for(table) is None:
+        banned = {b.upper() for b in self.policy.banned_columns}
+        owner: dict[str, str] = {}
+        for table, schema in schemas.items():
+            source = self._source_for(table)
+            if source is None:
                 continue  # include/exclude filtered out (A7/A8)
-            # register the RAW member of the trifecta so the generated SQL
-            # artifacts are executable as-is (their FROM references
-            # <TABLE>_RAW; reference README.rst:10-17)
-            df.createOrReplaceTempView(upper_case_policy(f"{table}_RAW"))
+            assert_safe_identifier(table)
+            # the RAW member the generated SQL reads (reference README.rst:10-17)
+            raw = result.raw[table] = upper_case_policy(f"{table}_RAW")
             if self.policy.is_unmanaged(table):
                 result.skipped_unmanaged.append(table)  # A9
                 continue
-            if self.policy.banned_columns:
-                keep = [
-                    c
-                    for c in df.columns
-                    if c.upper() not in {b.upper() for b in self.policy.banned_columns}
-                ]
-                df = df.select(*keep)  # A3 at the data level
-            safe, pii = self.build_pair(table, df)
-            for view_df, is_pii in ((safe, False), (pii, True)):
-                if view_df is None:
-                    continue
-                name = self.view_name(table, is_pii)
-                view_df.createOrReplaceTempView(name)
-                result.views[name] = view_df
-                result.sql[name] = self.generate_sql(table, df, is_pii)
+            kept = StructType([f for f in schema.fields if f.name.upper() not in banned])
+            by_lower = {f.name.lower(): f for f in kept.fields}
+            redactions = {
+                by_lower[c].name: lit
+                for c, lit in self.policy.redactions_for(table).items() if c in by_lower
+            }
+            for col, lit in redactions.items():
+                check_redaction_literal(col, kept[col].dataType, lit)
+            col, pred = source.soft_delete or ("", None)
+            soft = (by_lower[col.lower()].name, pred) if col.lower() in by_lower else None
+            for pii in HALVES[self.pii_mode]:
+                name = self._name(source, table, pii)
+                if name in owner:
+                    # a PREFIX can make two tables alias to one view
+                    raise InvalidConfigurationException(
+                        f"tables {owner[name]!r} and {table!r} both map to view {name}"
+                    )
+                owner[name] = table
+                result.plans.append(RelationPlan(
+                    table, name, pii, raw, kept, {} if pii else redactions, soft
+                ))
             if self.policy.in_downstream_sources(table):  # A10
                 result.downstream_sources.append(table)
+        return result
+
+    def generate_sql(
+        self, plan: RelationPlan, temporary: bool = True, database: str | None = None
+    ) -> str:
+        """CREATE OR REPLACE VIEW text for one plan (reference
+        templates/model_sql_*.tpl) under the upper-case + reserved-word
+        quoting policy. Redactions are cast to the column's type, as in
+        ``safe_projection``, so the SQL view's schema is the DataFrame's."""
+        parts = []
+        for f in plan.schema.fields:
+            name = quote_identifier(upper_case_policy(f.name))
+            if f.name in plan.redactions:
+                literal = _sql_literal(plan.redactions[f.name])
+                name = f"CAST({literal} AS {f.dataType.simpleString()}) AS {name}"
+            parts.append(f"    {name}")
+        kind = "TEMPORARY VIEW" if temporary else "VIEW"
+        # the database qualifier keeps persistent views clear of same-named
+        # temp views; the FROM needs it too, since permanent views may not
+        # reference temporary ones
+        qualifier = f"{database}." if database else ""
+        sql = (
+            f"CREATE OR REPLACE {kind} {qualifier}{plan.name} AS\n"
+            "SELECT\n" + ",\n".join(parts) + f"\nFROM {qualifier}{plan.raw}"
+        )
+        if plan.soft_delete:
+            col, pred = plan.soft_delete
+            sql += f"\nWHERE {quote_identifier(upper_case_policy(col))} {pred}"
+        return sql
+
+    # -- sinks ------------------------------------------------------------
+    def materialize(self, tables: dict[str, DataFrame]) -> TrifectaResult:
+        """Full refresh as temp views: idempotent re-registration of every
+        planned view (reference builder.py:505-577; destructive clean +
+        rebuild semantics map to CREATE OR REPLACE)."""
+        result = self.plan({t: df.schema for t, df in tables.items()})
+        for table, raw in result.raw.items():
+            tables[table].createOrReplaceTempView(raw)
+        filtered: dict[str, DataFrame] = {}
+        for p in result.plans:
+            if p.table not in filtered:  # one filter per table, shared by both halves
+                col, pred = p.soft_delete or (None, None)
+                filtered[p.table] = soft_delete_filter(tables[p.table], col, pred)
+            df, cols = filtered[p.table], p.schema.fieldNames()
+            if p.pii:
+                view = pii_projection(df, cols)
+            else:
+                view = safe_projection(df, p.redactions, cols)
+            view.createOrReplaceTempView(p.name)
+            result.views[p.name] = view
+            result.sql[p.name] = self.generate_sql(p)
         return result
 
     def materialize_persistent(
         self, tables: dict[str, DataFrame], database: str = "default"
     ) -> TrifectaResult:
         """Catalog-persistent trifecta: save each RAW member as a managed
-        table, then execute CREATE OR REPLACE VIEW (non-temporary) from
-        the generated SQL — the direct analog of the reference's
-        warehouse CREATE VIEW boundary (reference README.rst:25-28,
-        templates config(schema=...)). Views live in the session catalog
-        under ``database`` and survive temp-view cleanup."""
+        table, then run each plan's CREATE OR REPLACE VIEW — the analog of
+        the reference's warehouse CREATE VIEW boundary (reference
+        README.rst:25-28). Views live under ``database`` and survive
+        temp-view cleanup."""
         assert_safe_identifier(database)
+        result = self.plan({t: df.schema for t, df in tables.items()})
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-        prev_db = self.spark.catalog.currentDatabase()
-        self.spark.catalog.setCurrentDatabase(database)
-        try:
-            result = TrifectaResult()
-            for table, df in tables.items():
-                if self._source_for(table) is None or self.policy.is_unmanaged(table):
-                    if self.policy.is_unmanaged(table):
-                        result.skipped_unmanaged.append(table)
-                    continue
-                raw_name = upper_case_policy(f"{table}_RAW")
-                df.write.mode("overwrite").format("parquet").saveAsTable(raw_name)
-                for is_pii in (False, True):
-                    if (is_pii and self.pii_mode == "nopii") or (
-                        not is_pii and self.pii_mode == "piionly"
-                    ):
-                        continue
-                    sql = self.generate_sql(
-                        table, df, is_pii, temporary=False, database=database
-                    )
-                    self.spark.sql(sql)
-                    name = self.view_name(table, is_pii)
-                    result.sql[name] = sql
-                    result.views[name] = self.spark.table(f"{database}.{name}")
-                if self.policy.in_downstream_sources(table):
-                    result.downstream_sources.append(table)
-            return result
-        finally:
-            self.spark.catalog.setCurrentDatabase(prev_db)
+        for table, raw in result.raw.items():
+            tables[table].write.mode("overwrite").saveAsTable(f"{database}.{raw}", "parquet")
+        for p in result.plans:
+            result.sql[p.name] = self.generate_sql(p, temporary=False, database=database)
+            self.spark.sql(result.sql[p.name])
+            result.views[p.name] = self.spark.table(f"{database}.{p.name}")
+        return result

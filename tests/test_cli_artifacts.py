@@ -6,6 +6,7 @@ import os
 import pytest
 import yaml
 
+from dbt_schema_builder_spark import cli
 from dbt_schema_builder_spark.cli import main, parse_args
 from dbt_schema_builder_spark.views.artifacts import (
     InvalidManualDirException,
@@ -67,7 +68,7 @@ def test_build_writes_artifacts(spark, config_file, tmp_path, sf_dir):
     assert "MAIN_PII__CUSTOMER.sql" in pii_files
     assert len(safe_files) == len(pii_files) == 3  # customer, orders, lineitem
     sql = open(os.path.join(out, "MAIN", "MAIN__CUSTOMER.sql")).read()
-    assert "'<redacted>' AS C_NAME" in sql
+    assert "CAST('<redacted>' AS string) AS C_NAME" in sql
     # schema doc + downstream doc
     doc = yaml.safe_load(open(os.path.join(out, "MAIN.yml")))
     assert doc["version"] == 2
@@ -126,3 +127,50 @@ def test_nopii_mode_writes_only_safe(spark, config_file, tmp_path, sf_dir):
     assert rc == 0
     assert os.path.isdir(os.path.join(out, "MAIN"))
     assert not os.path.isdir(os.path.join(out, "MAIN_PII"))
+
+
+def test_rebuild_keeps_hand_written_descriptions(
+    spark, config_file, tmp_path, sf_dir
+):
+    # reference builder.py:476-503: a full refresh carries the prior
+    # APP.yml metadata forward and drops tables that left the catalog
+    out = str(tmp_path / "out")
+    argv = ["build", "--destination-project", out, "--source-dir", sf_dir,
+            "--config", config_file]
+    assert main(argv) == 0
+    doc_path = os.path.join(out, "MAIN.yml")
+    doc = yaml.safe_load(open(doc_path))
+    (raw,) = [s for s in doc["sources"] if s["name"] == "RAW"]
+    for t in raw["tables"]:
+        if t["name"] == "customer":
+            t["description"] = "hand-written"
+    yaml.safe_dump(doc, open(doc_path, "w"))
+    cfg = yaml.safe_load(open(config_file))
+    cfg["apps"]["MAIN"]["sources"]["RAW"]["INCLUDE"].remove("orders")
+    yaml.safe_dump(cfg, open(config_file, "w"))
+    assert main(argv) == 0
+    (raw,) = [
+        s for s in yaml.safe_load(open(doc_path))["sources"] if s["name"] == "RAW"
+    ]
+    tables = {t["name"]: t for t in raw["tables"]}
+    assert set(tables) == {"customer", "lineitem"}
+    assert tables["customer"]["description"] == "hand-written"
+    assert tables["lineitem"]["description"] == ""
+
+
+def test_view_name_collision_exits_1(spark, tmp_path, monkeypatch, capsys):
+    # x under PREFIX EVT and evt_x both alias to view MAIN__EVT_X
+    cfg = {"apps": {"MAIN": {"sources": {
+        "EVENTS": {"INCLUDE": ["x"], "PREFIX": "EVT"},
+        "RAW": {"INCLUDE": ["evt_x"]},
+    }}}}
+    config = tmp_path / "config.yml"
+    config.write_text(yaml.safe_dump(cfg))
+    frames = {t: spark.createDataFrame([(1,)], "id int") for t in ("x", "evt_x")}
+    monkeypatch.setattr(cli, "load_tables", lambda spark, source_dir: frames)
+    rc = main(
+        ["build", "--destination-project", str(tmp_path / "out"), "--source-dir",
+         str(tmp_path), "--config", str(config)]
+    )
+    assert rc == 1
+    assert "both map to view MAIN__EVT_X" in capsys.readouterr().err

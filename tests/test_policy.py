@@ -37,11 +37,6 @@ class TestSourcePolicy:
         with pytest.raises(InvalidConfigurationException):
             SourcePolicy(name="RAW", include=["a"], exclude=["b"])
 
-    def test_soft_delete_clause_only_when_column_present(self):
-        p = SourcePolicy(name="RAW", soft_delete=("deleted_at", "IS NULL"))
-        assert p.soft_delete_clause(["id", "deleted_at"]) == "`deleted_at` IS NULL"
-        assert p.soft_delete_clause(["id"]) is None
-
     def test_from_config_rejects_unknown_keys(self):
         # reference builder.py:219-241
         with pytest.raises(InvalidConfigurationException):

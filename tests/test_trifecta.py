@@ -3,7 +3,11 @@ tests/test_app.py, tests/test_builder.py:178-211)."""
 
 import pytest
 
-from dbt_schema_builder_spark.config import AppPolicy, SourcePolicy
+from dbt_schema_builder_spark.config import (
+    AppPolicy,
+    InvalidConfigurationException,
+    SourcePolicy,
+)
 from dbt_schema_builder_spark.policy.metadata import (
     assemble_schema_doc,
     find_duplicates,
@@ -78,8 +82,9 @@ def test_generated_sql_text(spark, tables, policy):
     red_sql = builder.materialize({"customer": tables["customer"]}).sql[
         "MAIN__CUSTOMER"
     ]
-    assert "'<redacted>' AS C_NAME" in red_sql
-    assert "0 AS C_ACCTBAL" in red_sql
+    # every redaction is cast to its column's type, as the DataFrame view is
+    assert "CAST('<redacted>' AS string) AS C_NAME" in red_sql
+    assert "CAST(0 AS double) AS C_ACCTBAL" in red_sql
 
 
 def test_idempotent_full_refresh(spark, tables, policy):
@@ -113,6 +118,32 @@ def test_materialize_persistent_views(spark, tables, policy):
     }
     assert persistent["main__customer"] == "VIEW"
     assert persistent["customer_raw"] == "MANAGED"
+
+
+def test_bad_redaction_literal_fails_before_persistent_write(spark, tables, policy):
+    # the literal is checked against the column type when the view is
+    # planned, so nothing reaches the catalog
+    policy.redactions = {"MAIN.CUSTOMER": {"C_ACCTBAL": "abc"}}
+    with pytest.raises(InvalidConfigurationException, match="abc"):
+        TrifectaBuilder(spark, policy).materialize_persistent(
+            {"customer": tables["customer"]}, database="trifecta_bad_literal"
+        )
+    assert not spark.catalog.databaseExists("trifecta_bad_literal")
+
+
+def test_view_name_collision_is_rejected(spark):
+    # PREFIX EVT aliases x to EVT_X, the alias of evt_x in another source
+    policy = AppPolicy(
+        app="MAIN",
+        sources={
+            "EVENTS": SourcePolicy(name="EVENTS", include=["x"], prefix="EVT"),
+            "RAW": SourcePolicy(name="RAW", include=["evt_x"]),
+        },
+    )
+    frames = {t: spark.createDataFrame([(1,)], "id int") for t in ("x", "evt_x")}
+    with pytest.raises(InvalidConfigurationException, match="MAIN__EVT_X") as exc:
+        TrifectaBuilder(spark, policy).materialize(frames)
+    assert "'x'" in str(exc.value) and "'evt_x'" in str(exc.value)
 
 
 def test_merge_prior_metadata_prefix_variants():

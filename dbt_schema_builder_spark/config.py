@@ -139,14 +139,17 @@ class AppPolicy:
                 raise InvalidConfigurationException(
                     f"unmanaged_tables entry {pattern!r} is not a valid regex"
                 ) from exc
+        # lower-cased once, so a lookup per table does not scan every key;
+        # the first of two keys that differ only in case wins
+        self._redaction_index: dict[str, dict[str, object]] = {}
+        for k, v in self.redactions.items():
+            self._redaction_index.setdefault(
+                k.lower(), {c.lower(): lit for c, lit in v.items()}
+            )
 
     def redactions_for(self, table: str) -> dict[str, object]:
         """Case-insensitive lookup of the redaction map for APP.TABLE."""
-        key = f"{self.app}.{table}".lower()
-        for k, v in self.redactions.items():
-            if k.lower() == key:
-                return {c.lower(): lit for c, lit in v.items()}
-        return {}
+        return dict(self._redaction_index.get(f"{self.app}.{table}".lower(), {}))
 
     def is_unmanaged(self, table: str) -> bool:
         """Anchored regex match against SCHEMA.TABLE

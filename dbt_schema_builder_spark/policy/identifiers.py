@@ -59,6 +59,13 @@ def relation_alias(name: str, prefix: str | None = None) -> str:
     return name
 
 
+def backtick(name: str) -> str:
+    """Backtick-quote ``name`` whatever it is, backticks doubled: a column
+    reference in SQL text that never parses as a keyword, a function call
+    or a nested-field path (``a.b``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def quote_identifier(name: str) -> str:
     """Backtick-quote a name when it is reserved or not a plain identifier.
 
@@ -67,8 +74,7 @@ def quote_identifier(name: str) -> str:
     backticks for the same purpose.
     """
     if name.upper() in RESERVED_WORDS or not _PLAIN.match(name):
-        escaped = name.replace("`", "``")
-        return f"`{escaped}`"
+        return backtick(name)
     return name
 
 

@@ -11,6 +11,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+from .policy.identifiers import backtick
 
 
 def get_spark(
@@ -82,33 +94,98 @@ TABLES = (
 )
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) (from the footer).
+def _footer_file(path: str) -> str | None:
+    """The file whose footer Spark's inference reads for ``path``: the
+    path itself, or the first data file of a flat local directory (files
+    hidden by Spark's rule skipped). None for anything else — a remote URI,
+    an empty directory, or a directory with subdirectories (a
+    Hive-partitioned table's partition columns are in no footer)."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    entries = sorted(
+        e for e in os.listdir(path)
+        if not e.startswith(".") and not (e.startswith("_") and "=" not in e)
+    )
+    if not entries or any(os.path.isdir(os.path.join(path, e)) for e in entries):
+        return None
+    return os.path.join(path, entries[0])
 
-    Spark has no nanosecond timestamp. How a NANOS column surfaces depends
-    on the runtime: Spark 4.1 truncates it to TIMESTAMP_NTZ micros (the
-    ``nanosAsLong`` legacy conf is accepted but ignored); older runtimes
-    honoring the conf surface an epoch-nanos long. ``read_table``
-    normalizes every case to TIMESTAMP_NTZ micros — the same floor
-    DuckDB applies at its fetch layer, and timezone-independent.
-    """
+
+def _nested_types(arrow_type):
+    """Every Arrow type nested inside ``arrow_type`` (list items, struct
+    fields, map entries), depth first."""
+    for i in range(arrow_type.num_fields):
+        child = arrow_type.field(i).type
+        yield child
+        yield from _nested_types(child)
+
+
+def _as_nullable(dtype: DataType) -> DataType:
+    """Spark's ``asNullable``: a file source reads every field, array
+    element and map value as nullable, whatever the footer says."""
+    if isinstance(dtype, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True) for f in dtype.fields]
+        )
+    if isinstance(dtype, ArrayType):
+        return ArrayType(_as_nullable(dtype.elementType), True)
+    if isinstance(dtype, MapType):
+        return MapType(_as_nullable(dtype.keyType), _as_nullable(dtype.valueType), True)
+    return dtype
+
+
+def footer_schema(path: str) -> tuple[StructType | None, dict[str, DataType]]:
+    """The schema ``read_table`` returns for a parquet table, from one read
+    of one footer, and its TIMESTAMP(NANOS) columns.
+
+    The schema is PySpark's Arrow mapping with naive timestamps as
+    TIMESTAMP_NTZ — the types Spark's own inference gives, every field
+    nullable — except that NANOS columns carry their normalized type,
+    TIMESTAMP_NTZ micros. The NANOS map holds the type Spark reads each of
+    them as: an epoch-nanos long for INT64 (``nanosAsLong``), a timestamp
+    for legacy INT96.
+
+    The schema is None where the footer cannot decide it, and Spark must
+    infer: no single local footer (see ``_footer_file``), a type PySpark's
+    mapping rejects (unsigned integers, float16, date64, ...), a type Spark
+    reads differently from that mapping (duration and null columns, TIME),
+    or a NANOS timestamp nested in a struct, list or map."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    file = _footer_file(path)
+    if file is None:
+        return None, {}
+    footer = pq.ParquetFile(file).schema  # the footer read ``read_schema`` makes
+    arrow = footer.to_arrow_schema()
+    int96 = {
+        footer.column(i).path
+        for i in range(len(footer))
+        if footer.column(i).physical_type == "INT96"
+    }
+    nanos: dict[str, DataType] = {
+        f.name: TimestampType() if f.name in int96 else LongType()
+        for f in arrow
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    }
+    for f in arrow:
+        nested = list(_nested_types(f.type))
+        if any(
+            pa.types.is_duration(t) or pa.types.is_time(t) or pa.types.is_null(t)
+            for t in [f.type, *nested]
+        ) or any(pa.types.is_timestamp(t) and t.unit == "ns" for t in nested):
+            return None, nanos
     try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not inner:
-                return []
-            path = os.path.join(path, inner[0])
-        schema = pq.ParquetFile(path).schema_arrow
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
-        return []
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    except TypeError:  # PySparkTypeError: no Spark type for this Arrow type
+        return None, nanos
+    return _as_nullable(StructType([
+        StructField(f.name, TimestampNTZType()) if f.name in nanos else f
+        for f in schema.fields
+    ])), nanos
 
 
 _EPOCH_NTZ = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
@@ -141,38 +218,44 @@ def epoch_micros(col) -> F.Column:
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read one parquet table, normalizing nanosecond timestamps to
-    TIMESTAMP_NTZ microseconds regardless of runtime.
+    """Read one parquet table with the schema its footer gives, normalizing
+    nanosecond timestamps to TIMESTAMP_NTZ microseconds on any runtime.
+
+    One footer read (``footer_schema``) decides both the schema and the
+    NANOS handling, and Spark is given that schema, so the read runs no
+    schema-inference job. Only where the footer cannot decide the schema
+    (a Hive-partitioned directory, a type without an exact Spark mapping)
+    does Spark infer it, one job per read as before.
 
     This is the one seam where timestamp representation is decided: every
     consumer sees TIMESTAMP_NTZ micros and derives epoch math through
     ``epoch_millis``/``epoch_micros`` (never ``unix_millis``, which
-    rejects NTZ). Safe under any session — vanilla Spark 4.1 already
-    surfaces NANOS as truncated NTZ; older runtimes honoring
-    ``nanosAsLong`` surface a long, converted here."""
+    rejects NTZ). A NANOS column is read as its epoch-nanos long — with a
+    given schema under any session, and under inference through the
+    ``nanosAsLong`` conf set here — and converted with integer ``div``
+    (full int64 precision, truncating to the micro as DuckDB does) from
+    the NTZ epoch, which needs no timezone; a legacy INT96 timestamp is
+    cast to NTZ (an identity under the UTC session the engine pins)."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(path)
-    for c in _nanos_timestamp_columns(path):
-        dt = df.schema[c].dataType.typeName()
-        if dt == "long":
-            # integer `div` keeps full int64 precision; timestampadd from
-            # the NTZ epoch is timezone-independent
-            df = df.withColumn(
-                c,
-                F.expr(
-                    f"timestampadd(MICROSECOND, `{c}` div 1000, {_EPOCH_NTZ})"
-                ),
+    schema, nanos = footer_schema(path)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType([
+            StructField(f.name, nanos.get(f.name, f.dataType)) for f in schema.fields
+        ]))
+    df = reader.parquet(path)
+    normalized = {}
+    for c, stored in nanos.items():
+        if isinstance(stored, LongType):
+            normalized[c] = F.expr(
+                f"timestampadd(MICROSECOND, {backtick(c)} div 1000, {_EPOCH_NTZ})"
             )
-        elif dt == "timestamp":
-            # LTZ surfacing (conf honored differently): pin to NTZ; the
-            # engine session runs UTC so the cast is an identity
-            df = df.withColumn(c, F.col(c).cast("timestamp_ntz"))
-        # timestamp_ntz: already the normalized form (micros truncation
-        # applied by the parquet reader)
-    return df
+        else:
+            normalized[c] = F.expr(f"CAST({backtick(c)} AS TIMESTAMP_NTZ)")
+    return df.withColumns(normalized) if normalized else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES):

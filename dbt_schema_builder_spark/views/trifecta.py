@@ -25,6 +25,7 @@ from ..policy.identifiers import quote_identifier, relation_alias, upper_case_po
 from ..policy.redaction import (
     check_redaction_literal,
     pii_projection,
+    redaction_sql,
     safe_projection,
     soft_delete_filter,
 )
@@ -63,16 +64,6 @@ class TrifectaResult:
     downstream_sources: list[str] = field(default_factory=list)
     plans: list[RelationPlan] = field(default_factory=list)
     raw: dict[str, str] = field(default_factory=dict)
-
-
-def _sql_literal(literal: object) -> str:
-    """SQL text of a redaction literal. Strings are escaped, never stripped,
-    so "it's done" or an already-quoted value comes out intact."""
-    if literal is None:
-        return "NULL"
-    if isinstance(literal, (int, float)):
-        return repr(literal)
-    return "'" + str(literal).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 class TrifectaBuilder:
@@ -163,14 +154,14 @@ class TrifectaBuilder:
     ) -> str:
         """CREATE OR REPLACE VIEW text for one plan (reference
         templates/model_sql_*.tpl) under the upper-case + reserved-word
-        quoting policy. Redactions are cast to the column's type, as in
-        ``safe_projection``, so the SQL view's schema is the DataFrame's."""
+        quoting policy. Redactions render through ``redaction_sql``, the text
+        ``safe_projection`` selects, so the SQL view's schema is the
+        DataFrame's."""
         parts = []
         for f in plan.schema.fields:
             name = quote_identifier(upper_case_policy(f.name))
             if f.name in plan.redactions:
-                literal = _sql_literal(plan.redactions[f.name])
-                name = f"CAST({literal} AS {f.dataType.simpleString()}) AS {name}"
+                name = f"{redaction_sql(plan.redactions[f.name], f.dataType)} AS {name}"
             parts.append(f"    {name}")
         kind = "TEMPORARY VIEW" if temporary else "VIEW"
         # the database qualifier keeps persistent views clear of same-named

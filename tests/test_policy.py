@@ -2,7 +2,21 @@
 coverage (reference tests/test_schema.py:11-166, tests/test_relation.py:292-352,
 tests/test_builder.py:41-175)."""
 
+import dataclasses
+import decimal
+
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DecimalType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from dbt_schema_builder_spark.config import (
     AppPolicy,
@@ -54,6 +68,19 @@ class TestAppPolicy:
         with pytest.raises(InvalidConfigurationException):
             assert_safe_identifier("bad;drop table")
         assert assert_safe_identifier("GOOD_1") == "GOOD_1"
+
+    def test_redactions_for_is_case_insensitive(self):
+        p = AppPolicy(
+            app="MAIN",
+            redactions={"main.Customer": {"C_Name": "x"}, "MAIN.CUSTOMER": {"c": 1}},
+        )
+        assert p.redactions_for("CUSTOMER") == {"c_name": "x"}  # first key wins
+        assert p.redactions_for("orders") == {}
+        p.redactions_for("customer")["c_name"] = "changed"  # callers get a copy
+        assert p.redactions_for("customer") == {"c_name": "x"}
+        moved = dataclasses.replace(p, redactions={"MAIN.ORDERS": {"O_X": 0}})
+        assert moved.redactions_for("orders") == {"o_x": 0}
+        assert moved.redactions_for("customer") == {}
 
     def test_unmanaged_regex_anchored(self):
         # reference relation.py:140-154: '$' appended, so PART matches
@@ -114,3 +141,62 @@ class TestRedaction:
         assert filtered.count() <= li.count()
         # absent column: no-op
         assert soft_delete_filter(li, "nope", "IS NULL").count() == li.count()
+
+    def test_projections_match_the_column_api_form(self, spark):
+        # awkward names (backtick, space, dot, reserved words, mixed case,
+        # a struct field with a space) and literals (quote, backslash, None,
+        # negative float, numeric string, "true" on a boolean, 0 on a decimal)
+        df = spark.createDataFrame(
+            [("x", "y", 1, 2.5, True, "m", 10, "k", decimal.Decimal("1.50"), 0.5, (1,)),
+             (None, "z", None, None, False, None, None, "j", None, None, None)],
+            StructType([
+                StructField("a`b", StringType()),
+                StructField("with space", StringType()),
+                StructField("x.y", IntegerType()),
+                StructField("order", DoubleType()),
+                StructField("select", BooleanType()),
+                StructField("MixedCase", StringType()),
+                StructField("plain", LongType()),
+                StructField("Dot.Kept", StringType()),
+                StructField("amount", DecimalType(10, 2)),
+                StructField("ratio", DoubleType()),
+                StructField("nested", StructType([StructField("a b", IntegerType())])),
+            ]),
+        )
+        redactions = {
+            "A`B": "it's",
+            "with space": "back\\slash",
+            "X.Y": "42",
+            "ORDER": -1.5,
+            "select": "true",
+            "mixedcase": None,
+            "amount": 0,
+            "nested": None,
+        }
+        columns = list(reversed(df.columns))
+
+        def ref(c):
+            return F.col("`" + c.replace("`", "``") + "`")
+
+        def column_api(redactions):
+            lowered = {k.lower(): v for k, v in redactions.items()}
+            return df.select(*[
+                F.lit(lowered[c.lower()]).cast(df.schema[c].dataType).alias(c)
+                if c.lower() in lowered else ref(c)
+                for c in columns
+            ])
+
+        for got, want in (
+            (safe_projection(df, redactions, columns), column_api(redactions)),
+            (pii_projection(df, columns), column_api({})),
+            (pii_projection(df), df.select(*[ref(c) for c in df.columns])),
+        ):
+            assert got.schema == want.schema  # names, types, nullability, order
+            assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+        safe = safe_projection(df, redactions, columns).first()
+        assert (safe["a`b"], safe["with space"], safe["x.y"]) == ("it's", "back\\slash", 42)
+        assert (safe["order"], safe["select"], safe["MixedCase"]) == (-1.5, True, None)
+        # SQL has no infinity literal: the string cast gives the same value
+        # (a nullable column, where the Column form's literal was not)
+        inf = safe_projection(df, {"ratio": float("-inf")}).first()["ratio"]
+        assert inf == float("-inf")

@@ -1,6 +1,8 @@
 """Trifecta end-to-end tests (reference app.py / builder.py:505-577,
 tests/test_app.py, tests/test_builder.py:178-211)."""
 
+import dataclasses
+
 import pytest
 
 from dbt_schema_builder_spark.config import (
@@ -123,7 +125,7 @@ def test_materialize_persistent_views(spark, tables, policy):
 def test_bad_redaction_literal_fails_before_persistent_write(spark, tables, policy):
     # the literal is checked against the column type when the view is
     # planned, so nothing reaches the catalog
-    policy.redactions = {"MAIN.CUSTOMER": {"C_ACCTBAL": "abc"}}
+    policy = dataclasses.replace(policy, redactions={"MAIN.CUSTOMER": {"C_ACCTBAL": "abc"}})
     with pytest.raises(InvalidConfigurationException, match="abc"):
         TrifectaBuilder(spark, policy).materialize_persistent(
             {"customer": tables["customer"]}, database="trifecta_bad_literal"

@@ -1,12 +1,13 @@
 """CLI entry point — parity with the reference's console script
 (reference schema_builder.py:16-123: ``build`` subcommand,
 ``--destination-project`` required, ``--nopii``/``--piionly`` mutually
-exclusive).
+exclusive). ``build`` scans ``--source-dir``, reads each table's schema
+from its parquet footer and writes SQL/YAML text; it starts no JVM.
 
 Usage:
     python -m dbt_schema_builder_spark build \
         --destination-project /path/out \
-        --source-dir /root/testdata/sf0.001 \
+        --source-dir /path/tables \
         --config config.yml [--nopii | --piionly]
 
 The config YAML carries the same overlay surface as the reference's six
@@ -35,7 +36,7 @@ import yaml
 
 from .config import AppPolicy, InvalidConfigurationException, SourcePolicy
 from .policy.metadata import assemble_schema_doc, carry_forward_metadata
-from .session import get_spark, load_tables
+from .session import source_schemas
 from .views.artifacts import manual_models, prior_schema_doc, write_artifacts
 from .views.trifecta import HALVES, TrifectaBuilder
 
@@ -77,20 +78,21 @@ def run_build(args: argparse.Namespace) -> int:
     with open(args.config) as f:
         config = yaml.safe_load(f) or {}
     pii_mode = "nopii" if args.nopii else "piionly" if args.piionly else "both"
-    spark = get_spark(app_name="dbt-schema-builder-spark-cli")
-    tables = load_tables(spark, args.source_dir.rstrip("/"))
+    tables = source_schemas(args.source_dir)
     exit_code = 0
     for app, raw in (config.get("apps") or {}).items():
         policy = policy_from_config(app, raw)
         manual = manual_models(args.destination_project, app)
-        selected = {t: df for t, df in tables.items() if t.lower() not in manual}
+        selected = {t: schema for t, schema in tables.items() if t.lower() not in manual}
+        builder = TrifectaBuilder(None, policy, pii_mode=pii_mode)
         try:
-            result = TrifectaBuilder(spark, policy, pii_mode=pii_mode).materialize(selected)
+            result = builder.plan(selected)
         except InvalidConfigurationException as exc:
             # e.g. two tables aliased to one view, or a bad redaction literal
             print(f"ERROR: {app}: {exc}", file=sys.stderr)
             exit_code = 1
             continue
+        result.sql = {p.name: builder.generate_sql(p) for p in result.plans}
         # a full refresh keeps the hand-written metadata of the prior
         # APP.yml (reference builder.py:476-503)
         doc = carry_forward_metadata(
@@ -101,7 +103,7 @@ def run_build(args: argparse.Namespace) -> int:
                     s.name: [t for t in selected if s.selects(t)]
                     for s in policy.sources.values()
                 },
-                models={name: list(df.columns) for name, df in result.views.items()},
+                models={p.name: p.schema.fieldNames() for p in result.plans},
             ),
             prior_schema_doc(args.destination_project, app),
             {s.name: s.prefix for s in policy.sources.values()},
@@ -119,16 +121,13 @@ def run_build(args: argparse.Namespace) -> int:
             models={},
         )
         written = write_artifacts(args.destination_project, app, result, doc, downstream)
-        print(f"{app}: {len(result.views)} views, {len(written)} artifacts, "
+        print(f"{app}: {len(result.plans)} views, {len(written)} artifacts, "
               f"{len(result.skipped_unmanaged)} unmanaged skipped")
     return exit_code
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = parse_args(argv)
-    if args.command == "build":
-        return run_build(args)
-    return 2
+    return run_build(parse_args(argv))  # "build" is the one, required command
 
 
 if __name__ == "__main__":

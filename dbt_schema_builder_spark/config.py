@@ -68,15 +68,16 @@ class SourcePolicy:
             )
         if self.prefix:
             assert_safe_identifier(self.prefix)
+        # lower-cased once, as ``selects`` runs for every table
+        self._include = {x.lower() for x in self.include}
+        self._exclude = {x.lower() for x in self.exclude}
 
     def selects(self, table: str) -> bool:
         """Include/exclude filtering (reference schema.py:83-103)."""
         t = table.lower()
-        if self.include:
-            return t in {x.lower() for x in self.include}
-        if self.exclude:
-            return t not in {x.lower() for x in self.exclude}
-        return True
+        if self._include:
+            return t in self._include
+        return t not in self._exclude
 
     @classmethod
     def from_config(cls, name: str, raw: dict) -> "SourcePolicy":
@@ -146,6 +147,7 @@ class AppPolicy:
             self._redaction_index.setdefault(
                 k.lower(), {c.lower(): lit for c, lit in v.items()}
             )
+        self._downstream = {x.lower() for x in self.downstream_allow_list}
 
     def redactions_for(self, table: str) -> dict[str, object]:
         """Case-insensitive lookup of the redaction map for APP.TABLE."""
@@ -163,7 +165,6 @@ class AppPolicy:
     def in_downstream_sources(self, table: str) -> bool:
         """Allow-list semi-filter; empty list includes everything
         (reference relation.py:164-175)."""
-        if not self.downstream_allow_list:
+        if not self._downstream:
             return True
-        key = f"{self.app}.{table}".lower()
-        return key in {x.lower() for x in self.downstream_allow_list}
+        return f"{self.app}.{table}".lower() in self._downstream

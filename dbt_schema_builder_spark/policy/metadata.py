@@ -35,6 +35,7 @@ def merge_prior_metadata(
     (reference app.py:44-58).
     """
     merged: dict[str, dict] = {}
+    lowered = {k.lower(): v for k, v in prior_sources.items()}
     for table in current_tables:
         candidates = [table]
         if prefix:
@@ -42,7 +43,6 @@ def merge_prior_metadata(
             if table.startswith(f"{prefix}_"):
                 candidates.append(table[len(prefix) + 1 :])
         hit = None
-        lowered = {k.lower(): v for k, v in prior_sources.items()}
         for cand in candidates:
             if cand.lower() in lowered:
                 hit = lowered[cand.lower()]

@@ -73,9 +73,15 @@ class TrifectaBuilder:
 
     ``pii_mode``: "both" | "nopii" | "piionly" — the reference's
     --nopii/--piionly gating (reference schema_builder.py:65-80,
-    app.py:32-42)."""
+    app.py:32-42).
 
-    def __init__(self, spark: SparkSession, policy: AppPolicy, pii_mode: str = "both"):
+    ``spark`` is read only by ``materialize_persistent``, which runs the
+    views' SQL in it; planning, ``generate_sql`` and ``materialize`` need
+    no session, so the CLI passes None."""
+
+    def __init__(
+        self, spark: SparkSession | None, policy: AppPolicy, pii_mode: str = "both"
+    ):
         if pii_mode not in HALVES:
             raise ValueError(f"invalid pii_mode {pii_mode!r}")
         self.spark = spark

@@ -2,16 +2,29 @@
 relation.py:251-288 file layout, app.py:222-229, builder.py:378-387)."""
 
 import os
+import subprocess
+import sys
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 import yaml
 
-from dbt_schema_builder_spark import cli
-from dbt_schema_builder_spark.cli import main, parse_args
+from dbt_schema_builder_spark.cli import main, parse_args, policy_from_config
+from dbt_schema_builder_spark.session import (
+    TABLES,
+    footer_schema,
+    load_tables,
+    read_table,
+    source_schemas,
+)
 from dbt_schema_builder_spark.views.artifacts import (
     InvalidManualDirException,
     manual_models,
 )
+from dbt_schema_builder_spark.views.trifecta import TrifectaBuilder
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -53,7 +66,7 @@ def test_destination_project_required(config_file):
         parse_args(["build", "--source-dir", "x", "--config", config_file])
 
 
-def test_build_writes_artifacts(spark, config_file, tmp_path, sf_dir):
+def test_build_writes_artifacts(config_file, tmp_path, sf_dir):
     out = str(tmp_path / "out")
     os.makedirs(out)
     rc = main(
@@ -81,7 +94,7 @@ def test_build_writes_artifacts(spark, config_file, tmp_path, sf_dir):
     assert {s["name"] for s in ds["sources"]} == {"MAIN", "MAIN_PII"}
 
 
-def test_rebuild_is_destructive_clean(spark, config_file, tmp_path, sf_dir):
+def test_rebuild_is_destructive_clean(config_file, tmp_path, sf_dir):
     # reference builder.py:378-387: stale models from removed tables vanish
     out = str(tmp_path / "out")
     os.makedirs(os.path.join(out, "MAIN"), exist_ok=True)
@@ -95,7 +108,7 @@ def test_rebuild_is_destructive_clean(spark, config_file, tmp_path, sf_dir):
     assert not os.path.exists(stale)
 
 
-def test_manual_models_skip_generation(spark, config_file, tmp_path, sf_dir):
+def test_manual_models_skip_generation(config_file, tmp_path, sf_dir):
     # reference relation.py:156-162: hand-written model suppresses generation
     out = str(tmp_path / "out")
     os.makedirs(os.path.join(out, "MAIN_MANUAL"))
@@ -118,7 +131,7 @@ def test_manual_dir_must_be_flat(tmp_path):
         manual_models(str(tmp_path), "MAIN")
 
 
-def test_nopii_mode_writes_only_safe(spark, config_file, tmp_path, sf_dir):
+def test_nopii_mode_writes_only_safe(config_file, tmp_path, sf_dir):
     out = str(tmp_path / "out")
     rc = main(
         ["build", "--destination-project", out, "--source-dir", sf_dir,
@@ -129,9 +142,7 @@ def test_nopii_mode_writes_only_safe(spark, config_file, tmp_path, sf_dir):
     assert not os.path.isdir(os.path.join(out, "MAIN_PII"))
 
 
-def test_rebuild_keeps_hand_written_descriptions(
-    spark, config_file, tmp_path, sf_dir
-):
+def test_rebuild_keeps_hand_written_descriptions(config_file, tmp_path, sf_dir):
     # reference builder.py:476-503: a full refresh carries the prior
     # APP.yml metadata forward and drops tables that left the catalog
     out = str(tmp_path / "out")
@@ -158,7 +169,7 @@ def test_rebuild_keeps_hand_written_descriptions(
     assert tables["lineitem"]["description"] == ""
 
 
-def test_view_name_collision_exits_1(spark, tmp_path, monkeypatch, capsys):
+def test_view_name_collision_exits_1(tmp_path, capsys):
     # x under PREFIX EVT and evt_x both alias to view MAIN__EVT_X
     cfg = {"apps": {"MAIN": {"sources": {
         "EVENTS": {"INCLUDE": ["x"], "PREFIX": "EVT"},
@@ -166,11 +177,122 @@ def test_view_name_collision_exits_1(spark, tmp_path, monkeypatch, capsys):
     }}}}
     config = tmp_path / "config.yml"
     config.write_text(yaml.safe_dump(cfg))
-    frames = {t: spark.createDataFrame([(1,)], "id int") for t in ("x", "evt_x")}
-    monkeypatch.setattr(cli, "load_tables", lambda spark, source_dir: frames)
+    for t in ("x", "evt_x"):  # schema-only tables: build reads no rows
+        pq.write_table(pa.table({"id": pa.array([], pa.int32())}), tmp_path / f"{t}.parquet")
     rc = main(
         ["build", "--destination-project", str(tmp_path / "out"), "--source-dir",
          str(tmp_path), "--config", str(config)]
     )
     assert rc == 1
     assert "both map to view MAIN__EVT_X" in capsys.readouterr().err
+
+
+def test_build_starts_no_jvm(config_file, tmp_path, sf_dir):
+    # no java anywhere: JAVA_HOME points nowhere and PATH holds only the
+    # interpreter, so any Spark session would fail with JAVA_GATEWAY_EXITED
+    out = tmp_path / "out"
+    env = {**os.environ, "JAVA_HOME": "/nonexistent",
+           "PATH": os.path.dirname(sys.executable)}
+    proc = subprocess.run(
+        [sys.executable, "-m", "dbt_schema_builder_spark", "build",
+         "--destination-project", str(out), "--source-dir", sf_dir,
+         "--config", config_file],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert "MAIN: 6 views, 8 artifacts, 0 unmanaged skipped" in proc.stdout
+    written = sorted(
+        os.path.relpath(os.path.join(d, f), out)
+        for d, _, files in os.walk(out) for f in files
+    )
+    assert written == [
+        "MAIN.yml",
+        "MAIN/MAIN__CUSTOMER.sql",
+        "MAIN/MAIN__LINEITEM.sql",
+        "MAIN/MAIN__ORDERS.sql",
+        "MAIN_PII/MAIN_PII__CUSTOMER.sql",
+        "MAIN_PII/MAIN_PII__LINEITEM.sql",
+        "MAIN_PII/MAIN_PII__ORDERS.sql",
+        "automatically_generated_sources/MAIN.yml",
+    ]
+
+
+def test_source_schemas_scans_the_source_dir(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    table = pa.table({"id": pa.array([1, 2], pa.int64()), "name": ["a", "b"]})
+    pq.write_table(table, src / "extra.parquet")  # file table, not in TABLES
+    (src / "t.parquet").mkdir()  # directory table with a commit marker
+    pq.write_table(table, src / "t.parquet" / "part-0.parquet")
+    (src / "t.parquet" / "_SUCCESS").write_text("")
+    (src / "p.parquet" / "k=1").mkdir(parents=True)  # Hive-partitioned
+    pq.write_table(table, src / "p.parquet" / "k=1" / "part-0.parquet")
+    for hidden in (".hidden.parquet", "_tmp.parquet"):
+        pq.write_table(table, src / hidden)
+    (src / "notes.txt").write_text("not a table")
+
+    schemas = source_schemas(str(src))
+    assert list(schemas) == ["extra", "p", "t"]
+    assert "extra" not in TABLES
+    for name, schema in schemas.items():
+        assert schema == read_table(spark, str(src / f"{name}.parquet")).schema, name
+    assert schemas["extra"] == footer_schema(str(src / "extra.parquet"))[0]
+    assert schemas["p"].fieldNames() == ["id", "name", "k"]
+    assert footer_schema(str(src / "p.parquet"))[0] is None  # the inferred path
+
+    # a dir without the fixture tables builds, and the extra table is built
+    cfg = {"apps": {"MAIN": {"sources": {"RAW": {"INCLUDE": ["extra", "p"]}}}}}
+    config = tmp_path / "config.yml"
+    config.write_text(yaml.safe_dump(cfg))
+    out = tmp_path / "out"
+    rc = main(["build", "--destination-project", str(out), "--source-dir", str(src),
+               "--config", str(config)])
+    assert rc == 0
+    assert sorted(os.listdir(out / "MAIN")) == ["MAIN__EXTRA.sql", "MAIN__P.sql"]
+    assert "    K\nFROM P_RAW" in (out / "MAIN" / "MAIN__P.sql").read_text()
+
+
+# every policy feature: a prefix, soft delete present (lineitem) and absent
+# (customer), a banned column, string / double / NULL-on-timestamp_ntz
+# redactions with a quote, an unmanaged table and a mixed-case allow-list
+FULL_CONFIG = {"apps": {
+    "MAIN": {
+        "sources": {
+            "RAW": {
+                "INCLUDE": ["customer", "orders", "lineitem", "supplier", "embeddings"],
+                "SOFT_DELETE": {"l_shipdate": "IS NOT NULL"},
+            },
+            "EVENTS": {"INCLUDE": ["events", "documents"], "PREFIX": "EVT"},
+        },
+        "redactions": {
+            "MAIN.CUSTOMER": {"C_NAME": "it's <redacted>", "C_ACCTBAL": 0.5},
+            "MAIN.EVENTS": {"TS": None, "EVENT_TYPE": "x"},
+        },
+        "banned_columns": ["PROPS"],
+        "unmanaged_tables": ["MAIN.SUPPLIER"],
+        "downstream_allow_list": ["MAIN.CUSTOMER", "main.Events"],
+    },
+    "OTHER": {"sources": {"RAW": {"INCLUDE": ["region", "nation"]}}},
+}}
+
+
+@pytest.mark.parametrize("pii_mode", ["both", "nopii", "piionly"])
+def test_build_sql_matches_the_dataframe_sink(spark, tmp_path, sf_dir, pii_mode):
+    # the footer-schema path of build renders what materialize renders from
+    # the DataFrames read_table gives
+    config = tmp_path / "config.yml"
+    config.write_text(yaml.safe_dump(FULL_CONFIG))
+    out = tmp_path / "out"
+    argv = ["build", "--destination-project", str(out), "--source-dir", sf_dir,
+            "--config", str(config)]
+    assert main(argv + ([] if pii_mode == "both" else [f"--{pii_mode}"])) == 0
+    for app, raw in FULL_CONFIG["apps"].items():
+        builder = TrifectaBuilder(spark, policy_from_config(app, raw), pii_mode=pii_mode)
+        expected = builder.materialize(load_tables(spark, sf_dir)).sql
+        assert expected
+        written = {
+            f[: -len(".sql")]: (out / d / f).read_text()
+            for d in (app, f"{app}_PII") if (out / d).is_dir()
+            for f in os.listdir(out / d)
+        }
+        assert written == {name: sql + "\n" for name, sql in expected.items()}

@@ -99,9 +99,10 @@ class TestAppPolicy:
     def test_downstream_allow_list_empty_means_all(self):
         # reference relation.py:164-175
         assert AppPolicy(app="M").in_downstream_sources("anything")
-        p = AppPolicy(app="M", downstream_allow_list=["M.CUSTOMER"])
+        p = AppPolicy(app="M", downstream_allow_list=["M.CUSTOMER", "m.Orders"])
         assert p.in_downstream_sources("customer")
-        assert not p.in_downstream_sources("orders")
+        assert p.in_downstream_sources("ORDERS")
+        assert not p.in_downstream_sources("lineitem")
 
 
 class TestIdentifiers:

@@ -112,12 +112,12 @@ def test_centroid_by_label_shape(spark, tables):
 
 
 def test_timestamp_nanos_truncation_agrees_with_duckdb(spark, tmp_path):
-    """events.parquet stores TIMESTAMP(NANOS) with real sub-microsecond
-    components (9992/10000 rows at sf0.01). Spark (via read_table's
-    nanos-as-long conversion) floors ns -> us; DuckDB keeps ns and floors
-    at epoch_us/epoch_ms. Any query emitting a time value must rely only
-    on granularities where both engines agree — this pins that us and ms
-    truncation agree on adversarial values (x999 ns, x001 ns, exact
+    """A TIMESTAMP(NANOS) column with real sub-microsecond components (the
+    fixtures store micros, so only this tmp file has them). Spark (via
+    read_table's nanos-as-long conversion) floors ns -> us; DuckDB keeps ns
+    and floors at epoch_us/epoch_ms. Any query emitting a time value must
+    rely only on granularities where both engines agree — this pins that us
+    and ms truncation agree on adversarial values (x999 ns, x001 ns, exact
     boundaries), so epoch-ms emission (q_session_window, q_asof_join) is
     engine-independent."""
     import duckdb

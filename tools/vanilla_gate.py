@@ -2,7 +2,7 @@
 
 Round-2 postmortem: every query analyzed fine under the engine session but
 4 of them failed under the driver's *vanilla* Spark 4.1.2 session, because
-`events.ts` surfaces as TIMESTAMP_NTZ there (`nanosAsLong` is ignored) and
+`events.ts` (naive TIMESTAMP(MICROS)) surfaces as TIMESTAMP_NTZ there and
 `unix_millis` rejects NTZ. driver_sim missed it because it ran with
 engine-like confs. This gate builds a SparkSession with NO engine confs —
 exactly what the driver harness does — and forces analysis of every

@@ -66,13 +66,10 @@ def get_spark(
         # distinct queries — measured on the 119-query bench: ~1,600
         # distinct codegen units, 2,550 Janino recompiles PER PASS at
         # ~4 ms each under the default, ~0 recompiles on warm passes at
-        # 8192 (tools/r13_codegen_probe.py; OPTIMIZATION_r13.md).
-        # Driver-side JVM memory only (~1.6k small generated classes),
-        # independent of core count / data scale.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192"),
-        )
+        # 8192 (OPTIMIZATION_r13.md §8). Driver-side JVM memory only
+        # (~1.6k small generated classes), independent of core count /
+        # data scale.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     if extra_conf:
         for k, v in extra_conf.items():

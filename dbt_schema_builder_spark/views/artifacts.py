@@ -21,6 +21,38 @@ import yaml
 
 from .trifecta import TrifectaResult
 
+# libyaml's parser and emitter are 3-4x faster than PyYAML's pure-Python
+# ones on a large APP.yml; PyYAML built without libyaml has neither.
+_DUMPER = getattr(yaml, "CSafeDumper", yaml.SafeDumper)
+_LOADER = getattr(yaml, "CSafeLoader", yaml.SafeLoader)
+
+
+def _libyaml_writes_same_text(node) -> bool:
+    """Whether libyaml's emitter writes ``node`` exactly as the pure-Python
+    one does: every string printable ASCII and every string key 1-99
+    characters. Past that the two differ (same data, other text): libyaml
+    wraps long double-quoted scalars (escapes such as ``\\xE9``, ``\\t``)
+    at other points, and writes the empty key and keys of 123+ characters
+    as simple keys where the pure-Python emitter uses the ``? `` form."""
+    if isinstance(node, str):
+        return node.isascii() and node.isprintable()
+    if isinstance(node, dict):
+        return all(
+            (not isinstance(k, str) or 0 < len(k) < 100)
+            and _libyaml_writes_same_text(k)
+            and _libyaml_writes_same_text(v)
+            for k, v in node.items()
+        )
+    if isinstance(node, list):
+        return all(_libyaml_writes_same_text(v) for v in node)
+    return True
+
+
+def _dump(doc: dict, path: str) -> None:
+    dumper = _DUMPER if _libyaml_writes_same_text(doc) else yaml.SafeDumper
+    with open(path, "w") as f:
+        yaml.dump(doc, f, Dumper=dumper, sort_keys=False)
+
 
 class InvalidManualDirException(Exception):
     """Raised when APP_MANUAL contains subdirectories
@@ -51,7 +83,7 @@ def prior_schema_doc(out_dir: str, app: str) -> dict | None:
     if not os.path.exists(path):
         return None
     with open(path) as f:
-        return yaml.safe_load(f)
+        return yaml.load(f, Loader=_LOADER)
 
 
 def clean_managed_dirs(out_dir: str, app: str) -> None:
@@ -88,14 +120,12 @@ def write_artifacts(
         written.append(path)
     if schema_doc is not None:
         path = os.path.join(out_dir, f"{app}.yml")
-        with open(path, "w") as f:
-            yaml.safe_dump(schema_doc, f, sort_keys=False)
+        _dump(schema_doc, path)
         written.append(path)
     if downstream_doc is not None:
         d = os.path.join(out_dir, "automatically_generated_sources")
         os.makedirs(d, exist_ok=True)
         path = os.path.join(d, f"{app}.yml")
-        with open(path, "w") as f:
-            yaml.safe_dump(downstream_doc, f, sort_keys=False)
+        _dump(downstream_doc, path)
         written.append(path)
     return written

@@ -296,3 +296,57 @@ def test_build_sql_matches_the_dataframe_sink(spark, tmp_path, sf_dir, pii_mode)
             for f in os.listdir(out / d)
         }
         assert written == {name: sql + "\n" for name, sql in expected.items()}
+
+
+AWKWARD = ["it's \"quoted\"", "two\nlines", "naïve café", "yes", "on", "~",
+           "null", "x" * 120, "inf", "None", "", " lead", "a: b", "- c", "#d",
+           "é" * 90, "tab\tand " * 12, float("inf"), None, True, 1.5]
+
+
+def test_yaml_artifacts_equal_pure_python_safe_dump(tmp_path, sf_dir, monkeypatch):
+    # with libyaml's emitter and parser where PyYAML has them, build writes
+    # the text of the pure-Python safe_dump and reads back what safe_load
+    # would; the first build's docs take the libyaml emitter, the rebuild's
+    # awkward hand-written metadata the pure-Python one
+    from dbt_schema_builder_spark import cli
+    from dbt_schema_builder_spark.views import artifacts
+
+    if yaml.__with_libyaml__:
+        assert artifacts._DUMPER is yaml.CSafeDumper
+        assert artifacts._LOADER is yaml.CSafeLoader
+    for node in (AWKWARD, {"": 1}, {"k" * 130: 1}):
+        assert not artifacts._libyaml_writes_same_text(node)
+    docs = {}
+
+    def spy(out_dir, app, result, schema_doc=None, downstream_doc=None):
+        docs[app] = (schema_doc, downstream_doc)
+        return artifacts.write_artifacts(out_dir, app, result, schema_doc, downstream_doc)
+
+    monkeypatch.setattr(cli, "write_artifacts", spy)
+    config = tmp_path / "config.yml"
+    config.write_text(yaml.safe_dump(FULL_CONFIG))
+    out = tmp_path / "out"
+    argv = ["build", "--destination-project", str(out), "--source-dir", sf_dir,
+            "--config", str(config)]
+
+    def check():
+        for app, (schema_doc, downstream_doc) in docs.items():
+            for doc, path in ((schema_doc, out / f"{app}.yml"), (
+                    downstream_doc, out / "automatically_generated_sources" / f"{app}.yml")):
+                assert path.read_text() == yaml.safe_dump(doc, sort_keys=False)
+
+    assert main(argv) == 0
+    check()
+    assert all(artifacts._libyaml_writes_same_text(d) for pair in docs.values() for d in pair)
+    # a rebuild reads hand-written table metadata back through the loader
+    doc_path = out / "MAIN.yml"
+    doc = yaml.safe_load(doc_path.read_text())
+    for source in doc["sources"]:
+        for t in source["tables"]:
+            t["meta"] = {"notes": AWKWARD}
+    doc_path.write_text(yaml.safe_dump(doc, sort_keys=False))
+    assert main(argv) == 0
+    check()
+    carried = [t for s in docs["MAIN"][0]["sources"] for t in s["tables"]]
+    assert len(carried) == 7
+    assert all(t["meta"] == {"notes": AWKWARD} for t in carried)

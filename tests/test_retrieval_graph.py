@@ -4,6 +4,7 @@ the differential suite; these pin the semantics)."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbt_schema_builder_spark.operators import graph, text
@@ -408,7 +409,15 @@ def test_gopher_rules_map_only_plan(spark, sf_dir):
     assert "Exchange" not in plan  # zero shuffle: pure map-side rules
 
 
-def test_learn_bpe_merges_textbook_sequence(spark):
+# driver_vocab_max_words=0 forces the distributed (Catalyst fold) loop;
+# the default runs the driver-side loop for these small vocabularies
+BPE_PATHS = pytest.mark.parametrize(
+    "vocab_bound", [{}, {"driver_vocab_max_words": 0}], ids=["driver", "distributed"]
+)
+
+
+@BPE_PATHS
+def test_learn_bpe_merges_textbook_sequence(spark, vocab_bound):
     """Sennrich et al.'s worked example: corpus {low x5, lower x2,
     newest x6, widest x3} must learn (e,s) then (es,t) first — the
     classic BPE trace — and merged symbols must appear in the final
@@ -419,7 +428,7 @@ def test_learn_bpe_merges_textbook_sequence(spark):
         ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
     )
     docs = _docs(spark, [text])
-    merges, syms = learn_bpe_merges(docs, n_merges=4)
+    merges, syms = learn_bpe_merges(docs, n_merges=4, **vocab_bound)
     assert merges[0] == ("e", "s")       # es: 6+3=9, the max
     assert merges[1] == ("es", "t")      # est: 9
     assert ("l", "o") in merges          # lo: 5+2=7 next
@@ -513,7 +522,8 @@ def test_ccnet_buckets_order_and_fractions(spark):
         )
 
 
-def test_learn_bpe_merges_counts_out(spark):
+@BPE_PATHS
+def test_learn_bpe_merges_counts_out(spark, vocab_bound):
     """counts_out receives the winning pair count per merge — the
     surface q_bpe_learn hashes (textbook corpus: es = 6+3 = 9, then
     est = 9)."""
@@ -524,7 +534,7 @@ def test_learn_bpe_merges_counts_out(spark):
     )
     counts: list = []
     merges, _ = learn_bpe_merges(
-        _docs(spark, [text]), n_merges=3, counts_out=counts
+        _docs(spark, [text]), n_merges=3, counts_out=counts, **vocab_bound
     )
     assert len(counts) == len(merges) == 3
     assert merges[0] == ("e", "s") and counts[0] == 9

@@ -1,15 +1,17 @@
 #!/usr/bin/env python
-"""Round-14 isolated code-version A/B (the r12_ab pattern): interleaved
-A/B subprocess passes between the working tree (A) and a git worktree
-at a given commit (B), median-of-N per side, fresh JVM per worker,
-bench.py's exact per-query discipline (construction inside the timer,
-noop sink, release_caches + clearCache between queries, sf0.001
-warm-up pass first).
+"""Cross-JVM code-version A/B: the working tree (A) against a commit (B).
+
+Each pass runs one fresh-JVM worker per side; passes alternate which side
+runs first. A worker times each key with bench.py's discipline
+(construction inside the timer, noop sink, release_caches + clearCache
+between keys, one sf0.001 warm-up pass) and reports the median of 3 warm
+samples. The summary prints both sides' medians and their ratio.
 
 Usage:
-  python tools/r14_ab.py <commit-for-B> <query> [query ...] [--passes N]
-Queries are __spark_entry__.queries() keys, or bench.py extra-entry
-names (x_*).
+  python tools/ab.py <commit-for-B> <key> [key ...] [--passes N]
+Keys are __spark_entry__.queries() keys or bench.EXTRA names (x_*).
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture dir), SPARK_GRAFT_CPUS.
+B is exported with `git archive` into /tmp/ab_<sha>, reused across runs.
 """
 from __future__ import annotations
 
@@ -29,7 +31,7 @@ def worker(tree: str, targets: list[str]) -> None:
     import __spark_entry__ as entrymod
     from dbt_schema_builder_spark.session import get_spark, release_caches
 
-    spark = get_spark(app_name="r14-ab", shuffle_partitions=32)
+    spark = get_spark(app_name="ab")
     spark.sparkContext.setLogLevel("ERROR")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     queries = entrymod.queries()
@@ -50,7 +52,7 @@ def worker(tree: str, targets: list[str]) -> None:
     def one_pass(sf_dir: str) -> dict[str, float]:
         out: dict[str, float] = {}
         for name in targets:
-            spark.sparkContext.setJobDescription(f"r14-ab: {name}")
+            spark.sparkContext.setJobDescription(f"ab: {name}")
             t0 = time.perf_counter()
             build(name, sf_dir).write.format("noop").mode(
                 "overwrite"
@@ -62,35 +64,48 @@ def worker(tree: str, targets: list[str]) -> None:
         return out
 
     one_pass("/root/testdata/sf0.001")  # warm-up (JIT/codegen)
-    # bench.py's methodology: median-of-3 warm in-session samples
-    import statistics as _st
-
     reps = [one_pass(sf) for _ in range(3)]
-    med = {
-        t: _st.median([r[t] for r in reps]) for t in targets
-    }
+    med = {t: statistics.median([r[t] for r in reps]) for t in targets}
     print("RESULT " + json.dumps(med), flush=True)
 
 
+def export_tree(commit: str) -> str:
+    """A plain copy of ``commit``'s files, made once per commit."""
+    sha = subprocess.run(
+        ["git", "rev-parse", "--verify", f"{commit}^{{commit}}"],
+        cwd=REPO, check=True, capture_output=True, text=True,
+    ).stdout.strip()
+    tree = f"/tmp/ab_{sha[:12]}"
+    if not os.path.isdir(tree):
+        os.makedirs(f"{tree}.part", exist_ok=True)
+        archive = subprocess.Popen(
+            ["git", "archive", sha], cwd=REPO, stdout=subprocess.PIPE
+        )
+        subprocess.run(
+            ["tar", "-x", "-C", f"{tree}.part"], stdin=archive.stdout, check=True
+        )
+        if archive.wait() != 0:
+            raise SystemExit(f"git archive {sha} failed")
+        os.rename(f"{tree}.part", tree)
+    return tree
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
+    args = sys.argv[1:]
     passes = 3
     if "--passes" in args:
         i = args.index("--passes")
         passes = int(args[i + 1])
         del args[i : i + 2]
+    if len(args) < 2:
+        raise SystemExit(__doc__)
     commit, targets = args[0], args[1:]
-    tree_b = f"/tmp/r14_ab_{commit[:8]}"
-    if not os.path.isdir(tree_b):
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", tree_b, commit],
-            cwd=REPO,
-            check=True,
-        )
-    sides = {"A(worktree)": REPO, f"B({commit[:8]})": tree_b}
-    samples = {s: {t: [] for t in targets} for s in sides}
+    sides = [("A(worktree)", REPO), (f"B({commit})", export_tree(commit))]
+    samples = {s: {t: [] for t in targets} for s, _ in sides}
     for i in range(passes):
-        for side, tree in sides.items():
+        # alternate which side runs first, so drift within a pass
+        # falls on both sides equally
+        for side, tree in sides if i % 2 == 0 else sides[::-1]:
             proc = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--worker", tree]
                 + targets,
@@ -114,9 +129,10 @@ def main() -> None:
                 flush=True,
             )
     print()
+    (sa, _), (sb, _) = sides
     for t in targets:
-        meds = {s: statistics.median(samples[s][t]) for s in sides}
-        (sa, a), (sb, b) = meds.items()
+        a = statistics.median(samples[sa][t])
+        b = statistics.median(samples[sb][t])
         print(
             f"{t}: A median {a:.2f} s vs B median {b:.2f} s -> "
             f"A/B {a / b:.2f}x  "

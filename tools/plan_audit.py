@@ -1,20 +1,38 @@
 #!/usr/bin/env python
-"""Generate PLANS.md: the formatted physical plan of each headline query
-at sf0.01, annotated with the scale-relevant properties to look for.
-Re-run after plan-affecting changes: python tools/plan_audit.py
+"""Formatted physical plans, two ways.
+
+With no arguments, regenerate PLANS.md: the plan of each headline query,
+annotated with the scale-relevant properties to look for. Re-run after
+plan-affecting changes:
+
+    python tools/plan_audit.py
+
+With a label and keys, write ``plans/<label>/<key>.txt``: the full
+``explain("formatted")`` of each queries() or bench.EXTRA key, e.g. to
+diff a plan before and after a change:
+
+    python tools/plan_audit.py before q_hash_agg q_star_join
+
+Both read SPARK_GRAFT_SF_DIR (default: the sf0.01 fixture dir). Operators
+whose construction runs eager jobs (kmeans, dedup_clusters) still run
+them here.
 """
 
 from __future__ import annotations
 
+import argparse
+import io
 import os
 import sys
+from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from dbt_schema_builder_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from bench import HEADLINE  # noqa: E402
+from bench import EXTRA, HEADLINE  # noqa: E402
 
 NOTES = {
     "q_hash_agg": "two HashAggregates (partial+final), one exchange",
@@ -122,10 +140,36 @@ NOTES = {
 }
 
 
-def main() -> None:
+def capture(spark, sf_dir: str, out_dir: str, keys: list[str]) -> None:
+    queries = {**entrymod.queries(), **EXTRA}
+    os.makedirs(out_dir, exist_ok=True)
+    for name in keys:
+        df = queries[name](spark, sf_dir)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as fh:
+            fh.write(buf.getvalue())
+        print(f"wrote {path}")
+
+
+def main(argv: list[str] | None = None, root: str = REPO) -> None:
+    parser = argparse.ArgumentParser(
+        description="Write PLANS.md, or with LABEL KEY..., "
+        "plans/LABEL/KEY.txt for each key."
+    )
+    parser.add_argument("label", nargs="?", help="output dir under plans/")
+    parser.add_argument("keys", nargs="*", help="queries() or bench.EXTRA keys")
+    args = parser.parse_args(argv)
+    if args.label and not args.keys:
+        parser.error("a label needs at least one key")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.label:
+        capture(spark, sf_dir, os.path.join(root, "plans", args.label), args.keys)
+        return
     queries = entrymod.queries()
     out = [
         "# PLANS — formatted physical plans of the headline queries",
@@ -153,7 +197,7 @@ def main() -> None:
         out.append(tree.strip())
         out.append("```")
         out.append("")
-    with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
+    with open(os.path.join(root, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len([n for n in HEADLINE if n in queries])} plans")
 

@@ -1,12 +1,19 @@
-"""10x scale-up stress for the round-3 operators (SCALE.md evidence).
+"""10x scale-up stress: times operators warm at sf0.1 and on a 10x replica.
 
-Builds a pseudo-sf1 replica of the sf0.1 documents/embeddings tables
-(10 copies, distinct ids, one perturbing token per document copy so
+Builds a pseudo-sf1 replica of the sf0.1 documents/embeddings/events
+tables (10 copies, distinct ids, one perturbing token per document copy so
 replicas are near- not exact-duplicates — deliberately inflating shingle
 document frequency and bucket collision rates), then times each operator
-warm at sf0.1 and at 10x and prints a JSON table of the scaling ratios.
+at sf0.1 and at 10x and prints a JSON table of the scaling ratios. Each
+time covers plan construction plus a noop write, after one warm-up run:
+driver-looped operators (kmeans, label propagation, BPE training,
+pagerank) run Spark jobs while their plan is built.
 
-Run: SPARK_GRAFT_DRIVER_MEM=24g python tools/scale_stress.py
+Run:  SPARK_GRAFT_DRIVER_MEM=24g python tools/scale_stress.py
+Env:  STRESS_ONLY=kmeans,bpe  runs only ops whose name contains one of
+      the comma-separated substrings; STRESS_FACTOR=100 replicates 100x;
+      SPARK_GRAFT_CPUS=2|4 sets the cores, so a core-scaling run is two
+      runs of the same STRESS_ONLY set.
 """
 import json
 import os
@@ -17,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from dbt_schema_builder_spark.session import get_spark, read_table
+from dbt_schema_builder_spark.session import get_spark, read_table, release_caches
 from dbt_schema_builder_spark.operators import (
     classifier,
     dedup,
@@ -29,7 +36,7 @@ from dbt_schema_builder_spark.operators import (
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # replication factor: 10 (default) or 100 for the extreme-scale pass
 FACTOR = int(os.environ.get("STRESS_FACTOR", "10"))
-STAGE = f"/tmp/scale{FACTOR}_r3" if FACTOR != 10 else "/tmp/scale10_r3"
+STAGE = f"/tmp/scale{FACTOR}_r3"
 
 spark = get_spark(app_name="scale-stress")
 spark.sparkContext.setLogLevel("ERROR")
@@ -96,16 +103,39 @@ def stage_events_10x():
     return read_table(spark, f"{STAGE}/events.parquet")
 
 
-def timed(df):
-    df.write.format("noop").mode("overwrite").save()  # warm
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    dt = round(time.perf_counter() - t0, 2)
-    # the bench.py lesson applies here too: operators persist() subtrees
-    # and never unpersist, and accumulated blocks tax later ops —
-    # measured pagerank 23.4 s polluted vs 9.0 s isolated at 10x
+def _run(build):
+    build().write.format("noop").mode("overwrite").save()
+
+
+def _release():
+    # the bench.py lesson applies here too: operators persist() subtrees,
+    # and accumulated blocks tax later ops — measured pagerank 23.4 s
+    # polluted vs 9.0 s isolated at 10x
+    release_caches()
     spark.catalog.clearCache()
+
+
+def timed(build):
+    """Seconds to build ``build()``'s plan and write it to a noop sink,
+    after one warm-up run; caches are released after each run."""
+    _run(build)
+    _release()
+    t0 = time.perf_counter()
+    _run(build)
+    dt = round(time.perf_counter() - t0, 2)
+    _release()
     return dt
+
+
+table = {}
+
+
+def record(name, build1, build10):
+    t1, t10 = timed(build1), timed(build10)
+    table[name] = {
+        "sf0.1": t1, "x%d" % FACTOR: t10, "ratio": round(t10 / max(t1, 0.01), 1)
+    }
+    print(f"{name}: {t1}s -> {t10}s ({table[name]['ratio']}x)", file=sys.stderr)
 
 
 docs1 = read_table(spark, f"{SF_DIR}/documents.parquet")
@@ -244,6 +274,18 @@ OPS = {
     "semantic_dedup(lsh,thr.9)": lambda d, e: similarity.semantic_dedup(
         e, threshold=0.9, strategy="lsh"
     ),
+    # round-6: the bounded SemDeDup branch (per-cell GEMM over probed
+    # IVF cells); at 100x the dup-dense replica makes its OUTPUT
+    # quadratic by construction (SCALE.md), so run it at 10x
+    "semantic_dedup(ivf_sharded,thr.4)": lambda d, e: similarity.semantic_dedup(
+        e, threshold=0.4, strategy="ivf_sharded", k_cells=32, nprobe=8
+    ),
+    # round-6: BPE training iterates over the word table, not the
+    # corpus, so it is vocabulary-bounded and should stay flat; the
+    # frame timed is the final symbol table
+    "learn_bpe_merges(6)": lambda d, e: text.learn_bpe_merges(
+        d, n_merges=6, min_pair_count=2
+    )[1],
     # round-7: the substring modality's adversarial case IS the 10x
     # replica corpus — every replica shares its full >=20-token body
     # with 9 siblings, so nearly every position sits in a duplicated
@@ -355,14 +397,13 @@ def _want(name: str) -> bool:
     return not _only or any(s in name for s in _only)
 
 
-table = {}
 for name, fn in OPS.items():
-    if not _want(name):
-        continue
-    t1 = timed(fn(docs1, emb1))
-    t10 = timed(fn(docs10, emb10))
-    table[name] = {"sf0.1": t1, "x%d" % FACTOR: t10, "ratio": round(t10 / max(t1, 0.01), 1)}
-    print(f"{name}: {t1}s -> {t10}s ({table[name]['ratio']}x)", file=sys.stderr)
+    if _want(name):
+        record(
+            name,
+            lambda fn=fn: fn(docs1, emb1),
+            lambda fn=fn: fn(docs10, emb10),
+        )
 
 
 def _run_events_ops():
@@ -370,6 +411,7 @@ def _run_events_ops():
     not per-user volume — funnel/interval/rolling must scale ~linearly
     (shuffles on high-cardinality keys, no quadratic fan-out)."""
     from dbt_schema_builder_spark.operators import temporal, timeseries
+    from dbt_schema_builder_spark.sources.io import zorder_layout_report
 
     ev1 = read_table(spark, f"{SF_DIR}/events.parquet")
     ev10 = stage_events_10x()
@@ -382,7 +424,14 @@ def _run_events_ops():
         "conversion_latency": lambda ev: timeseries.conversion_latency(ev),
         "cumulative_users": lambda ev: timeseries.cumulative_users(ev),
         "scd2_history": lambda ev: temporal.scd2_history(ev),
-        "pagerank_topk(it=3)": None,  # graph op, handled below
+        # round-6: the z-order layout's one non-distributed stage is the
+        # cum-count window over the DISTINCT z values, so key
+        # cardinality (which the replica multiplies) is its stress axis;
+        # it writes the clustered copy and reports from the footers
+        "zorder_layout_report(bits=4,files=8)": lambda ev: zorder_layout_report(
+            spark, ev, ["user_id", "event_id"], f"{STAGE}/zorder_layout",
+            bits=4, n_files=8,
+        ),
     }
     # round-5 event-table ops: one-shuffle aggregates + join-backs —
     # the 10x key-cardinality replica must hold them ~linear
@@ -395,76 +444,55 @@ def _run_events_ops():
         ev, key="event_type"
     )
     for name, fn in ev_ops.items():
-        if fn is None or not _want(name):
-            continue
-        t1 = timed(fn(ev1))
-        t10 = timed(fn(ev10))
-        table[name] = {
-            "sf0.1": t1, "x%d" % FACTOR: t10, "ratio": round(t10 / max(t1, 0.01), 1)
-        }
-        print(f"{name}: {t1}s -> {t10}s ({table[name]['ratio']}x)", file=sys.stderr)
+        if _want(name):
+            record(name, lambda fn=fn: fn(ev1), lambda fn=fn: fn(ev10))
 
-    if not (_want("pagerank") or _want("fuzzy")):
-        return
-    # pagerank: replicate the edge list into 10 disjoint copies (same
-    # topology per copy, 10x nodes+edges — per-iteration joins must be
-    # linear; rebuild the whole pipeline inside the timer, driver-looped
-    # operators execute jobs during plan construction)
-    from dbt_schema_builder_spark.operators import graph as graph_ops
-
-    orders = read_table(spark, f"{SF_DIR}/orders.parquet")
-    li = read_table(spark, f"{SF_DIR}/lineitem.parquet")
-    e1 = graph_ops.bipartite_edges(orders, li).persist()
-    e1.count()
+    # the harness's own inputs are local checkpoints, which the cache
+    # release between runs leaves in place
     rep = spark.range(FACTOR).select(F.col("id").alias("rep"))
-    e10 = (
-        e1.crossJoin(rep)
-        .select(
-            (F.col("src") * 256 + F.col("rep")).alias("src"),
-            (F.col("dst") * 256 + F.col("rep")).alias("dst"),
-        )
-        .persist()
-    )
-    e10.count()
-
-    def pr(edges):
-        t0 = time.perf_counter()
-        graph_ops.pagerank_topk(edges, iterations=3, k=50).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return round(time.perf_counter() - t0, 2)
-
     if _want("pagerank"):
-        pr(e1)  # warm
-        t1, t10 = pr(e1), pr(e10)
-        table["pagerank_topk(it=3)"] = {
-            "sf0.1": t1, "x%d" % FACTOR: t10, "ratio": round(t10 / max(t1, 0.01), 1)
-        }
-        print(f"pagerank_topk(it=3): {t1}s -> {t10}s ({table['pagerank_topk(it=3)']['ratio']}x)", file=sys.stderr)
+        # pagerank: replicate the edge list into 10 disjoint copies (same
+        # topology per copy, 10x nodes+edges — per-iteration joins must
+        # be linear)
+        from dbt_schema_builder_spark.operators import graph as graph_ops
 
-    # fuzzy matching: replicate parts 10x with the SAME names — the
-    # signature table is unchanged, so the levenshtein join must be
-    # volume-immune (only the distinct aggregate sees more rows)
-    from dbt_schema_builder_spark.operators import relational as rel
-
-    if not _want("fuzzy"):
-        return
-    part1 = read_table(spark, f"{SF_DIR}/part.parquet")
-    part10 = (
-        part1.crossJoin(rep)
-        .select(
-            (F.col("p_partkey") * FACTOR + F.col("rep")).alias("p_partkey"),
-            "p_name",
+        orders = read_table(spark, f"{SF_DIR}/orders.parquet")
+        li = read_table(spark, f"{SF_DIR}/lineitem.parquet")
+        e1 = graph_ops.bipartite_edges(orders, li).localCheckpoint(eager=True)
+        e10 = (
+            e1.crossJoin(rep)
+            .select(
+                (F.col("src") * 256 + F.col("rep")).alias("src"),
+                (F.col("dst") * 256 + F.col("rep")).alias("dst"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .persist()
-    )
-    part10.count()
-    t1 = timed(rel.fuzzy_match_names(part1))
-    t10 = timed(rel.fuzzy_match_names(part10))
-    table["fuzzy_match_names"] = {
-        "sf0.1": t1, "x%d" % FACTOR: t10, "ratio": round(t10 / max(t1, 0.01), 1)
-    }
-    print(f"fuzzy_match_names: {t1}s -> {t10}s ({table['fuzzy_match_names']['ratio']}x)", file=sys.stderr)
+        record(
+            "pagerank_topk(it=3)",
+            lambda: graph_ops.pagerank_topk(e1, iterations=3, k=50),
+            lambda: graph_ops.pagerank_topk(e10, iterations=3, k=50),
+        )
+
+    if _want("fuzzy"):
+        # fuzzy matching: replicate parts 10x with the SAME names — the
+        # signature table is unchanged, so the levenshtein join must be
+        # volume-immune (only the distinct aggregate sees more rows)
+        from dbt_schema_builder_spark.operators import relational as rel
+
+        part1 = read_table(spark, f"{SF_DIR}/part.parquet")
+        part10 = (
+            part1.crossJoin(rep)
+            .select(
+                (F.col("p_partkey") * FACTOR + F.col("rep")).alias("p_partkey"),
+                "p_name",
+            )
+            .localCheckpoint(eager=True)
+        )
+        record(
+            "fuzzy_match_names",
+            lambda: rel.fuzzy_match_names(part1),
+            lambda: rel.fuzzy_match_names(part10),
+        )
 
 
 _run_events_ops()
